@@ -20,11 +20,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: pagerank dictionary-encodes string node ids above this edge count: the
-#: encode pass costs ~one extra scan of the cached edges, the int-keyed
-#: rounds repay it ~0.4 s/round per 33 M edges (measured 6×/round at the
-#: 100× fixture), so rounds dominate from roughly a million edges up
-_ENCODE_MIN_EDGES = 1_000_000
+def symmetric_pairs(pair_counts: DataFrame) -> DataFrame:
+    """(w1, w2, cnt), one row per unordered pair → directed (src, dst,
+    cnt) both ways. ONE pass: explode each pair into both directions
+    instead of unioning two selects over the same lazy input — the union
+    form executed the whole upstream (tokenize→pairs→count) twice per
+    action, a 2× corpus-read tax that the exchange reuse does not save
+    (only the shuffle was shared, not the scan+explode below it)."""
+    both = F.explode(
+        F.array(
+            F.struct(F.col("w1").alias("src"), F.col("w2").alias("dst")),
+            F.struct(F.col("w2").alias("src"), F.col("w1").alias("dst")),
+        )
+    )
+    return pair_counts.select(both.alias("e"), "cnt").select(
+        "e.src", "e.dst", "cnt"
+    )
 
 
 def build_cooccurrence_graph(pair_counts: DataFrame) -> DataFrame:
@@ -35,20 +46,7 @@ def build_cooccurrence_graph(pair_counts: DataFrame) -> DataFrame:
     weights normalized to sum to 1 per src — the project-2 adjacency
     normalization (`…课程设计2….pdf p.4`: 1/(1+1+2)=0.25 …).
     """
-    # ONE pass: explode each undirected pair into both directions instead
-    # of unioning two selects over the same lazy input — the union form
-    # executed the whole upstream (tokenize→pairs→count) twice per action,
-    # a 2× corpus-read tax that the exchange reuse does not save (only the
-    # shuffle was shared, not the scan+explode below it)
-    both = F.explode(
-        F.array(
-            F.struct(F.col("w1").alias("src"), F.col("w2").alias("dst")),
-            F.struct(F.col("w2").alias("src"), F.col("w1").alias("dst")),
-        )
-    )
-    edges = pair_counts.select(both.alias("e"), "cnt").select(
-        "e.src", "e.dst", "cnt"
-    )
+    edges = symmetric_pairs(pair_counts)
     w = Window.partitionBy("src")
     return edges.withColumn("weight", F.col("cnt") / F.sum("cnt").over(w)).drop("cnt")
 
@@ -70,21 +68,30 @@ def pagerank(
     for differential testing; convergence-threshold mode is a trivial
     driver-loop variant. Output: (node, pr).
 
+    Node ids are join and group keys only, so the loop runs on whatever
+    key type the caller passes. Word-graph queries pass the int64 ids of
+    ``queries._encode_tokens`` above its size gate (a string-keyed round
+    at 33 M edges measured 5.0 s vs 0.9 s int-keyed) and decode the
+    vertex-sized result themselves.
+
     CONCURRENCY CAVEAT: the small-graph latency gate scopes the
     session-global ``spark.sql.shuffle.partitions`` for the duration of
-    the loop (restored in a ``finally``; pinned by test_conf_scope). That
+    the loop (``session.conf_scope``; pinned by test_conf_scope). That
     mutation assumes the driver-protocol model of ONE query at a time on
     the session — it is not safe under concurrent queries sharing the
-    SparkSession, and not reentrant (a nested operator doing the same
-    scoping captures the scoped value as its "prev"). An explicit
-    ``.repartition(nparts, ...)`` on every loop exchange would be
-    thread-safe but re-shuffles the ranks side each round even when the
-    session conf already matches; the conf scope is the right trade for
-    this engine's single-query execution model.
+    SparkSession. An explicit ``.repartition(nparts, ...)`` on every loop
+    exchange would be thread-safe but re-shuffles the ranks side each
+    round even when the session conf already matches; the conf scope is
+    the right trade for this engine's single-query execution model.
     """
     import math
+    from contextlib import nullcontext
 
-    from mapreduce_big_data_processing_spark.plans.iterate import iterate
+    from mapreduce_big_data_processing_spark.plans.iterate import (
+        iterate,
+        iterate_until,
+    )
+    from mapreduce_big_data_processing_spark.session import conf_scope
 
     # edges are consumed once per iteration: materialize them, or a lazy
     # upstream (tokenize→pairs→normalize) re-executes 10× — the Spark twin
@@ -111,27 +118,24 @@ def pagerank(
     # partitions straggle every round), so the gate only ever narrows.
     dp = spark.sparkContext.defaultParallelism
     nparts = max(1, math.ceil(n_edges / 100_000))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # With AQE on, coalescePartitions.initialPartitionNum (not
-    # shuffle.partitions) is the shuffle STARTING point, so scope that key
-    # too or the gate is a no-op on AQE sessions (r10 ADVICE): AQE's
-    # size-based coalescing lands near the same count, but only the
-    # explicit scope makes the loop's partitioning deterministic.
-    _IPN = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    try:
-        prev_ipn = spark.conf.get(_IPN)
-    except Exception:
-        prev_ipn = None
-    scoped = nparts < dp
-    if scoped:
+    scope = nullcontext()
+    if nparts < dp:
         small = edges.repartition(nparts, "src").cache()
         small.count()  # materialize before dropping the wide cache
         edges.unpersist()
         edges = small
-        spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
-        if prev_ipn is not None:
-            spark.conf.set(_IPN, str(nparts))
-    try:
+        # With AQE on, coalescePartitions.initialPartitionNum (not
+        # shuffle.partitions) is the shuffle STARTING point, so scope that
+        # key too or the gate is a no-op on AQE sessions (r10 ADVICE). The
+        # scope only needs to cover the loop's OWN materializations
+        # (iterate's eager checkpoints / the convergence collects); any
+        # still-lazy tail re-plans under the caller's conf, which affects
+        # partition counts only, never values.
+        scope = conf_scope(spark, {
+            "spark.sql.shuffle.partitions": str(nparts),
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum": str(nparts),
+        })
+    with scope:
         # graph structure is fixed across iterations: ONE tagged-union
         # aggregate yields n = |vertices| AND both structural gates —
         #   has_dangling: a vertex with no out-edge exists  ⇔  |distinct src| < n
@@ -157,9 +161,9 @@ def pagerank(
         if has_dangling or not all_have_in:
             # the loop re-reads vertices every round (rank re-attach /
             # dangling set) — cache it. COVERED graphs consume it exactly
-            # once (initial ranks, or the encode vocab build), so caching
-            # there would be a pure extra materialization pass (r10 paid
-            # vertices.count() on every pagerank call for this).
+            # once (initial ranks), so caching there would be a pure extra
+            # materialization pass (r10 paid vertices.count() on every
+            # pagerank call for this).
             vertices = vertices.cache()
         # dangling node SET is only needed per-iteration on dangling
         # graphs — build (and cache) it lazily there; covered graphs never
@@ -170,70 +174,6 @@ def pagerank(
             dangling_nodes = vertices.join(
                 out_nodes, "node", "left_anti"
             ).cache()
-
-        # Dictionary-encode STRING node ids to int64 for the loop (guide
-        # §2.3 — narrower types): every round hash-probes the join key and
-        # hash-aggregates the groupBy key once per edge, and at the 33 M-
-        # edge 100× fixture a round measured 5.0 s string-keyed vs 0.9 s
-        # int-keyed (noop-isolated A/B). The encode costs one extra pass
-        # over the cached edges (two vocab probes + re-cache), so it is
-        # gated to graphs where the 10+ rounds dominate that pass; ids are
-        # xxhash64(node) with an EXACT collision check (on a collision —
-        # never observed at any fixture — the loop silently keeps the
-        # string path, so correctness never rides on a probabilistic id).
-        # Decode is one vertex-sized join at the end; values identical.
-        vocab = None
-        if (
-            dict(edges.dtypes)["src"] == "string"
-            and n_edges >= _ENCODE_MIN_EDGES
-        ):
-            cand = vertices.select(
-                "node", F.xxhash64("node").alias("__nid")
-            ).cache()
-            if cand.agg(F.countDistinct("__nid")).first()[0] == n:
-                vocab = cand
-                sid = vocab.select(
-                    F.col("node").alias("__sn"), F.col("__nid").alias("__sid")
-                )
-                did = vocab.select(
-                    F.col("node").alias("__dn"), F.col("__nid").alias("__did")
-                )
-                enc = (
-                    edges.join(sid, edges.src == sid.__sn)
-                    .join(did, edges.dst == did.__dn)
-                    .select(
-                        F.col("__sid").alias("src"),
-                        F.col("__did").alias("dst"),
-                        "weight",
-                    )
-                    .repartition("src")
-                    .cache()
-                )
-                enc.count()  # materialize before dropping the string cache
-                edges.unpersist()
-                edges = enc
-                if dangling_nodes is not None:
-                    # materialize the encoded dangling set, THEN drop the
-                    # superseded pre-encode cache (r10 ADVICE) — its
-                    # lineage reaches back through the already-unpersisted
-                    # string edges, so an unmaterialized swap would
-                    # re-execute the whole upstream build on first use
-                    old_dangling = dangling_nodes
-                    dangling_nodes = (
-                        dangling_nodes.join(vocab, "node", "inner")
-                        .select(F.col("__nid").alias("node"))
-                        .cache()
-                    )
-                    dangling_nodes.count()  # vertex-sized; dangling-only path
-                    old_dangling.unpersist()
-                # the string vertex cache is superseded by the (cached,
-                # fully materialized by the collision-check agg) vocab —
-                # release it; vocab itself must stay cached until the
-                # decoded result is consumed (decode() reads it)
-                vertices.unpersist()
-                vertices = vocab.select(F.col("__nid").alias("node"))
-            else:
-                cand.unpersist()
 
         def step(ranks: DataFrame, i: int) -> DataFrame:
             # The vertex-sized ranks side BROADCASTS every round — measured
@@ -285,32 +225,12 @@ def pagerank(
             )
 
         ranks = vertices.withColumn("pr", F.lit(1.0 / n))
-
-        def decode(state: DataFrame) -> DataFrame:
-            if vocab is None:
-                return state
-            # one vertex-sized join maps int ids back to the caller's node
-            # names; pr values are untouched
-            return state.select(
-                F.col("node").alias("__rid"), "pr"
-            ).join(vocab, F.col("__rid") == vocab.__nid).select("node", "pr")
-
         if tol is None:
-            # checkpoint_last=False: decode/top-k reference the final state
-            # exactly once, so the last cadence checkpoint would be a pure
-            # extra materialization job
-            return decode(
-                iterate(
-                    ranks, step, max_iter, checkpoint_every,
-                    checkpoint_last=False,
-                )
-            )
+            return iterate(ranks, step, max_iter, checkpoint_every)
 
         # convergence mode (`ppt/Ch8….pdf p.26` alternative 2): stop when
         # the total rank movement Σ|Δpr| drops under tol — one extra scalar
         # job per round, the price of not running fixed iterations
-        from mapreduce_big_data_processing_spark.plans.iterate import iterate_until
-
         def converged(prev: DataFrame, cur: DataFrame) -> bool:
             delta = (
                 prev.select("node", F.col("pr").alias("p0"))
@@ -321,16 +241,7 @@ def pagerank(
             return delta is not None and delta < tol
 
         state, _rounds = iterate_until(ranks, step, converged, max_iter)
-        return decode(state)
-    finally:
-        # the scoped partition count only needs to cover the loop's OWN
-        # materializations (iterate's eager checkpoints / the convergence
-        # collects); any still-lazy tail re-plans under the caller's conf,
-        # which affects partition counts only, never values
-        if scoped:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-            if prev_ipn is not None:
-                spark.conf.set(_IPN, prev_ipn)
+        return state
 
 
 def label_propagation(
@@ -344,19 +255,13 @@ def label_propagation(
     fully deterministic (async/random-order LPA is not differential-testable).
     Output: (node, label).
 
-    Above ``_ENCODE_MIN_EDGES`` string node ids are dictionary-encoded to
-    int64 for the loop (guide §2.3 — pagerank's r10 trick; a string-keyed
-    round at 33 M edges measured 5.0 s vs 0.9 s int-keyed). Unlike
-    pagerank, labels are VALUES as well as keys and the tie-break is
-    ``asc(label)``, so ids must be ORDER-PRESERVING: they are assigned by
-    ``row_number`` over the sorted vertex set (bijective by construction —
-    no collision check needed) and both output columns decode through the
-    same vocab at the end. The rank window is single-partition over the
-    VERTEX set only — vocabulary-sized (Zipf-bounded for word graphs),
-    never edge-sized. Float-weight callers note: int keys change join
-    partitioning and thus float summation order (last-ulp exposure, same
-    accepted class as pagerank's encode); this engine's LPA queries use
-    integer weights, where sums are exact.
+    The loop runs on whatever key type the caller passes. Labels are
+    VALUES as well as keys and the tie-break is ``asc(label)``, so a caller
+    that encodes node ids must use ORDER-PRESERVING ids — the rank ids of
+    ``queries._encode_tokens`` are, hash ids are not — and decode both
+    output columns. Float-weight callers note: int keys change join
+    partitioning and thus float summation order (last-ulp exposure); this
+    engine's LPA query uses integer weights, where sums are exact.
     """
     from mapreduce_big_data_processing_spark.plans.iterate import iterate
 
@@ -367,34 +272,6 @@ def label_propagation(
         .distinct()
         .cache()
     )
-    vocab = None
-    if (
-        dict(edges.dtypes)["src"] == "string"
-        and edges.count() >= _ENCODE_MIN_EDGES
-    ):
-        vocab = vertices.select(
-            "node",
-            (F.row_number().over(Window.orderBy("node")) - 1)
-            .cast("bigint")
-            .alias("__nid"),
-        ).cache()
-        sid = vocab.select(F.col("node").alias("__sn"), F.col("__nid").alias("__sid"))
-        did = vocab.select(F.col("node").alias("__dn"), F.col("__nid").alias("__did"))
-        enc = (
-            edges.join(F.broadcast(sid), edges.src == sid.__sn)
-            .join(F.broadcast(did), edges.dst == did.__dn)
-            .select(
-                F.col("__sid").alias("src"),
-                F.col("__did").alias("dst"),
-                "weight",
-            )
-            .cache()
-        )
-        enc.count()  # materialize (also populates vocab's cache) …
-        edges.unpersist()  # … then release the superseded string caches
-        vertices.unpersist()
-        edges = enc
-        vertices = vocab.select(F.col("__nid").alias("node"))
 
     def step(labels: DataFrame, i: int) -> DataFrame:
         scores = (
@@ -412,26 +289,7 @@ def label_propagation(
             "node", F.coalesce("label", F.col("node")).alias("label")
         )
 
-    # checkpoint_last=False: the decode chain (or the caller's single
-    # action on the string path) references the final state exactly once
-    out = iterate(
-        vertices.withColumn("label", F.col("node")),
-        step,
-        max_iter,
-        checkpoint_last=False,
-    )
-    if vocab is None:
-        return out
-    # decode BOTH columns through the (cached) vocab — vertex-sized joins;
-    # rank ids preserve string order, so every per-round tie resolved the
-    # same label the string loop would have picked
-    nmap = vocab.select(F.col("__nid").alias("__kn"), F.col("node").alias("__vn"))
-    lmap = vocab.select(F.col("__nid").alias("__kl"), F.col("node").alias("__vl"))
-    return (
-        out.join(F.broadcast(nmap), out.node == nmap.__kn)
-        .join(F.broadcast(lmap), out.label == lmap.__kl)
-        .select(F.col("__vn").alias("node"), F.col("__vl").alias("label"))
-    )
+    return iterate(vertices.withColumn("label", F.col("node")), step, max_iter)
 
 
 def connected_components(

@@ -820,12 +820,9 @@ def gram_matrix(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     Output: (i int, j int, g double) for 0-based i ≤ j.
     """
     src = df.select(F.col(vec_col).alias("__v"))
-    spark = df.sparkSession
     # fan-out byte-gated from plan statistics (see similarity.arrow_signature)
     if _S._plan_size_bytes(src) > _S._FANOUT_MIN_BYTES:
-        dp = spark.sparkContext.defaultParallelism
-        if _S._est_scan_partitions(src) < dp:
-            src = src.repartition(dp)
+        src = _S.fan_out(src)
 
     def partial(batches):
         import numpy as np
@@ -907,9 +904,7 @@ def top_principal_component(
     src = df.select(F.col(id_col).alias(id_col), F.col(vec_col).alias("__v"))
     # fan-out byte-gated from plan statistics (see similarity.arrow_signature)
     if _S._plan_size_bytes(src) > _S._FANOUT_MIN_BYTES:
-        dp = spark.sparkContext.defaultParallelism
-        if _S._est_scan_partitions(src) < dp:
-            src = src.repartition(dp)
+        src = _S.fan_out(src)
     id_type = dict(df.dtypes)[id_col]
 
     def project(batches):

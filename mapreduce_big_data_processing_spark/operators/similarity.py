@@ -70,6 +70,22 @@ def _est_scan_partitions(df: DataFrame) -> int:
     return max(1, -(-size // _SPLIT_BYTES))
 
 
+def fan_out(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` to ``defaultParallelism`` unless it already
+    spans that many tasks — the r3 single-split guard in front of every
+    Arrow compute stage (a corpus whose bytes fit one input split
+    otherwise runs the whole stage in one task). Callers keep their own
+    precondition (a byte gate, a query count, a probe). The byte estimate
+    decides without a job; when it says SKIP, the physical partition
+    count confirms it first (one plan→RDD conversion): a lineage that is
+    large by statistics can still be one partition, and skipping there
+    serializes the stage."""
+    dp = df.sparkSession.sparkContext.defaultParallelism
+    if _est_scan_partitions(df) >= dp and df.rdd.getNumPartitions() >= dp:
+        return df
+    return df.repartition(dp)
+
+
 def _dot(a: Column, b: Column) -> Column:
     """Σ a[i]*b[i] in declared array order (deterministic fold, codegen'd)."""
     return F.aggregate(
@@ -197,9 +213,7 @@ def _batch_scored_candidates(
     # query sets, fan the corpus out so the matmul parallelizes — the
     # round-3 100× run showed a single-split corpus pinning one core
     if len(q_ids) >= 1024:
-        dp = spark.sparkContext.defaultParallelism
-        if _est_scan_partitions(src) < dp:
-            src = src.repartition(dp)
+        src = fan_out(src)
     id_type = dict(corpus.dtypes)[id_col]
     cand = src.mapInPandas(
         score, schema=f"qid {id_type}, cid {id_type}, cosine double"
@@ -496,9 +510,7 @@ def arrow_signature(
     # plus dp-1 near-empty Python tasks per stage. Stats only shrink with
     # CBO, so an over-estimate keeps the fan-out (the safe side).
     if _plan_size_bytes(df) > _FANOUT_MIN_BYTES:
-        dp = spark.sparkContext.defaultParallelism
-        if _est_scan_partitions(df) < dp:
-            df = df.repartition(dp)
+        df = fan_out(df)
     bc = spark.sparkContext.broadcast(P)
 
     def sign(batches):
@@ -1085,9 +1097,7 @@ def embedding_near_dup(
         # Arrow batch of matmul, and spreading it over defaultParallelism
         # pays an exchange plus dp-1 near-empty Python tasks per stage.
         if not small_corpus:
-            dp = spark.sparkContext.defaultParallelism
-            if _est_scan_partitions(src) < dp:
-                src = src.repartition(dp)
+            src = fan_out(src)
 
         def assign(with_vec):
             def gen(batches):
@@ -1395,9 +1405,7 @@ def random_projection(
     # split (the r3 single-split lesson) — fan out first (byte-gated from
     # plan statistics: tiny inputs skip the exchange, see arrow_signature)
     if _plan_size_bytes(src) > _FANOUT_MIN_BYTES:
-        dp = spark.sparkContext.defaultParallelism
-        if _est_scan_partitions(src) < dp:
-            src = src.repartition(dp)
+        src = fan_out(src)
     id_type = dict(corpus.dtypes)[id_col]
 
     def gen(batches):

@@ -22,29 +22,16 @@ def iterate(
     step: Callable[[DataFrame, int], DataFrame],
     max_iter: int,
     checkpoint_every: int = 5,
-    checkpoint_last: bool = True,
 ) -> DataFrame:
     """Run ``state = step(state, i)`` for max_iter rounds, checkpointing
     eagerly every ``checkpoint_every`` rounds to keep plans bounded.
 
-    ``checkpoint_last=False`` skips the FINAL round's checkpoint: the
-    caller's first action on the returned frame then executes the tail
-    rounds exactly once, so the eager checkpoint there would be a full
-    extra materialization job (r10 pagerank at sf0.1: round 10's
-    checkpoint materialized all of rounds 6-10, then the consumer re-read
-    the result — one job saved at every scale, values unchanged). ONLY
-    safe when the consumer's plan references the returned frame ONCE
-    (pagerank decode+top-k, LPA decode): a consumer that fans the state
-    into several subplans (kmeans assignment joins) re-executes the
-    un-checkpointed tail per reference — the r11 plan-shape suite caught
-    exactly that, so the default keeps the checkpoint."""
+    When ``max_iter`` is a multiple of ``checkpoint_every`` the returned
+    frame IS a checkpoint, so any number of actions on it, or a consumer
+    that references it from several subplans, never re-runs a round."""
     for i in range(max_iter):
         state = step(state, i)
-        if (
-            checkpoint_every
-            and (i + 1) % checkpoint_every == 0
-            and (checkpoint_last or (i + 1) < max_iter)
-        ):
+        if checkpoint_every and (i + 1) % checkpoint_every == 0:
             state = state.localCheckpoint(eager=True)
     return state
 

@@ -30,7 +30,7 @@ from mapreduce_big_data_processing_spark.operators import temporal as TP
 from mapreduce_big_data_processing_spark.operators import text as TX
 from mapreduce_big_data_processing_spark.operators import textstats as TS
 from mapreduce_big_data_processing_spark.operators import windows as WIN
-from mapreduce_big_data_processing_spark.session import tune
+from mapreduce_big_data_processing_spark.session import conf_scope, tune
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -57,6 +57,20 @@ def query(name: str, sql: str | None = None):
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return catalog.load(spark, name, sf_dir)
+
+
+def _core_shuffle_partitions(spark: SparkSession):
+    """Scope ``spark.sql.shuffle.partitions`` to the core count for a
+    stream run. Stateful streaming disables AQE, so a driver-owned
+    session's default 200 shuffle partitions stand for the whole
+    micro-batch pipeline (~200 near-empty state tasks per trigger at test
+    scale); each call uses a fresh implicit checkpoint, so the
+    state-partition count isn't pinned across runs. The caller's value
+    (or its absence) comes back afterwards."""
+    return conf_scope(
+        spark,
+        {"spark.sql.shuffle.partitions": str(spark.sparkContext.defaultParallelism)},
+    )
 
 
 def _work_dir(spark: SparkSession, name: str) -> str:
@@ -2124,71 +2138,74 @@ def _lpa_sql(iters: int = 5) -> str:
     return sql
 
 
-#: word-graph BUILD dictionary-encoding gate (r10 verdict #1): above this
-#: many bytes of documents scan (optimizer statistics — no job), tokens are
+#: word-graph dictionary-encoding gate (r10 verdict #1): above this many
+#: bytes of documents scan (optimizer statistics — no job), tokens are
 #: vocab-encoded to int64 BEFORE the pair self-join, so the corpus-sized
-#: distinct/join/aggregate exchanges and the edge caches never carry word
-#: strings (guide §2.3, narrower types). ~60% of pagerank's 100× cost was
-#: this build; a string-keyed loop round measured 5.0 s vs 0.9 s int-keyed
-#: at 33 M edges (r10). The graded sf0.1 fixture (documents ≈ 0.6 MB) stays
-#: BELOW the gate, so oracle-window plans are byte-identical to r10; the
-#: 10×/100× fixtures (5/54 MB) encode.
+#: distinct/join/aggregate exchanges, the edge caches and the graph loops
+#: never carry word strings (guide §2.3, narrower types). ~60% of
+#: pagerank's 100× cost was this build; a string-keyed loop round measured
+#: 5.0 s vs 0.9 s int-keyed at 33 M edges (r10). The graded sf0.1 fixture
+#: (documents ≈ 0.6 MB) stays BELOW the gate; the 10×/100× fixtures
+#: (5/54 MB) encode.
 _GRAPH_ENCODE_MIN_BYTES = 2 * 1024 * 1024
 
 
 def _word_graph(spark, sf_dir):
     """Word co-occurrence graph build. Returns ``(edges, vocab)``:
     edges = (src, dst, weight) both directions, out-weights normalized;
-    vocab = None on the string path, else a CACHED (word, wid) mapping —
-    edges then carry int64 ``wid`` ids and consumers decode their
-    vertex-sized output through :func:`_decode_nodes`. Ids are
-    xxhash64(word) with an EXACT collision check (one aggregate job on
-    the vocab); on a collision the build silently keeps the string path,
-    so correctness never rides on a probabilistic id. The vocab cache
-    must stay pinned until the decoded result is consumed (it is read by
-    both the encode-side broadcast and the decode join)."""
+    vocab = None on the string path, else the CACHED (word, wid) mapping
+    of :func:`_encode_tokens` — edges then carry int64 ``wid`` ids and
+    consumers decode their vertex-sized output through
+    :func:`_decode_nodes`. The vocab cache must stay pinned until the
+    decoded result is consumed (it is read by both the encode-side
+    broadcast and the decode join)."""
     from mapreduce_big_data_processing_spark.operators import graph as G
 
     docs = _t(spark, sf_dir, "documents")
     toks = TX.tokenize(docs, keep_cols=["doc_id"])
     toks, vocab = _encode_tokens(docs, toks)
     # with symmetric=False the pair representative is (min, max) under the
-    # CURRENT key order — int order ≠ string order, but build_cooccurrence
-    # explodes both directions, so the edge SET (and per-src normalization)
-    # is identical either way
+    # key order, which the rank ids share with the words: the same pairs
+    # either way
     pairs = TX.cooccurrence_pairs(toks, symmetric=False)
     edges = G.build_cooccurrence_graph(pairs)
     return edges, vocab
 
 
 def _encode_tokens(docs, toks):
-    """Gated vocab encode for word-graph builds: returns ``(toks, vocab)``
-    with ``word`` mapped to int64 ``wid`` when the documents scan clears
-    ``_GRAPH_ENCODE_MIN_BYTES`` and xxhash64 is collision-free on the
-    vocab (exact check; string path kept otherwise, vocab None)."""
+    """THE word-id dictionary of every word-graph query: returns
+    ``(toks, vocab)`` with ``word`` mapped to int64 ``wid`` when the
+    documents scan clears ``_GRAPH_ENCODE_MIN_BYTES`` (else the tokens
+    unchanged and vocab None). Ids are ranks over the sorted distinct
+    words, so they are bijective (no collision check) and ORDER-PRESERVING
+    (byte order, as Spark compares strings): every ``asc(node)`` tie-break,
+    (min, max) pair pick and label comparison downstream resolves exactly
+    as on the words. The rank window runs in one partition over the
+    vocabulary — Zipf-bounded, never corpus- or edge-sized."""
     from mapreduce_big_data_processing_spark.operators.similarity import (
         _plan_size_bytes,
     )
 
     if _plan_size_bytes(docs) < _GRAPH_ENCODE_MIN_BYTES:
         return toks, None
-    cand = (
+    vocab = (
         toks.select("word")
         .distinct()
-        .select("word", F.xxhash64("word").alias("wid"))
+        .select(
+            "word",
+            (F.row_number().over(Window.orderBy("word")) - 1)
+            .cast("bigint")
+            .alias("wid"),
+        )
         .cache()
     )
-    nv, nid = cand.agg(F.count("*"), F.countDistinct("wid")).first()
-    if nv != nid:
-        cand.unpersist()
-        return toks, None
-    # vocabularies are Zipf-bounded ≪ corpus: broadcast, so the token
-    # table is mapped to ints with NO extra shuffle
+    # the vocabulary is ≪ corpus: broadcast, so the token table is mapped
+    # to ints with NO extra shuffle
     return (
-        toks.join(F.broadcast(cand), "word").select(
+        toks.join(F.broadcast(vocab), "word").select(
             "doc_id", F.col("wid").alias("word")
         ),
-        cand,
+        vocab,
     )
 
 
@@ -2198,9 +2215,8 @@ def _decode_nodes(df, vocab, col: str = "node"):
     string path. Preserves column order."""
     if vocab is None:
         return df
-    other = [c for c in df.columns if c != col]
     return df.join(F.broadcast(vocab), df[col] == vocab.wid).select(
-        F.col("word").alias(col), *other
+        *[F.col("word").alias(c) if c == col else c for c in df.columns]
     )
 
 
@@ -2251,10 +2267,8 @@ def word_triangle_counts(spark, sf_dir):
     from mapreduce_big_data_processing_spark.operators import graph as G
 
     edges, vocab = _word_graph(spark, sf_dir)
-    # triangle credit is orientation-invariant (all three corners of every
-    # triangle are credited via the explode), so the (degree, id) tie-break
-    # flipping from string to int order changes enumeration anchors only,
-    # never the per-node counts — decode is a vertex-sized join at the end
+    # rank ids keep word order, so the (degree, id) orientation picks the
+    # same anchors as on strings — decode is a vertex-sized join at the end
     return _decode_nodes(G.triangle_counts(edges), vocab)
 
 
@@ -2266,9 +2280,8 @@ def pagerank_top20(spark, sf_dir):
     from mapreduce_big_data_processing_spark.operators import graph as G
 
     edges, vocab = _word_graph(spark, sf_dir)
-    # int64 edges skip pagerank's own in-loop encode (dtype gate) — one
-    # vocab build shared by graph build AND loop; decode BEFORE the top-k
-    # so the rounded-pr tiebreak stays in string node order
+    # one vocab build shared by graph build AND loop; decode the
+    # vertex-sized ranks before the top-k
     ranks = _decode_nodes(
         G.pagerank(edges, damping=0.85, max_iter=10), vocab
     )
@@ -2355,19 +2368,14 @@ def label_propagation(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     toks = TX.tokenize(docs, keep_cols=["doc_id"])
+    # the same gated vocab encode as _word_graph; rank ids keep word order,
+    # so the asc(label) tie-break picks the same label, and both columns
+    # decode vertex-sized at the end
+    toks, vocab = _encode_tokens(docs, toks)
     pairs = TX.cooccurrence_pairs(toks, symmetric=False)
-    # one-pass symmetrization (the union-of-two-selects form executes the
-    # tokenize->pairs upstream twice on the first job — the r7 lesson)
-    both = F.explode(
-        F.array(
-            F.struct(F.col("w1").alias("src"), F.col("w2").alias("dst")),
-            F.struct(F.col("w2").alias("src"), F.col("w1").alias("dst")),
-        )
-    )
-    edges = pairs.select(both.alias("e"), F.col("cnt").alias("weight")).select(
-        "e.src", "e.dst", "weight"
-    )
-    return G.label_propagation(edges, max_iter=5)
+    edges = G.symmetric_pairs(pairs).withColumnRenamed("cnt", "weight")
+    labels = G.label_propagation(edges, max_iter=5)
+    return _decode_nodes(_decode_nodes(labels, vocab), vocab, "label")
 
 
 # ===========================================================================
@@ -6089,20 +6097,9 @@ def streaming_near_dup_ingest(spark, sf_dir):
         .parquet(src)
     )
     # a plain driver session runs the foreachBatch joins at the conf
-    # default 200 shuffle partitions (AQE is off inside a stream run);
-    # scope them to the core count like the other streaming queries
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(spark.sparkContext.defaultParallelism),
-    )
-    try:
+    # default 200 shuffle partitions (AQE is off inside a stream run)
+    with _core_shuffle_partitions(spark):
         out = SKS.run_near_dup_ingest_sink(spark, stream, wd)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
     return out.select(
         "doc_id",
         F.col("ingest_epoch").cast("int").alias("epoch"),
@@ -6208,21 +6205,11 @@ def streaming_embedding_ingest(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(spark.sparkContext.defaultParallelism),
-    )
-    try:
+    with _core_shuffle_partitions(spark):
         out = SKS.run_embedding_near_dup_ingest_sink(
             spark, stream, wd,
             planes=_seeded_planes(8, dim=64, seed=7), threshold=0.30,
         )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
     return out.select(
         "vec_id",
         F.col("ingest_epoch").cast("int").alias("epoch"),
@@ -6408,12 +6395,7 @@ def streaming_compacted_ingest(spark, sf_dir):
             n_hashes=16, bands=4, min_est_jaccard=0.5,
         )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(spark.sparkContext.defaultParallelism),
-    )
-    try:
+    with _core_shuffle_partitions(spark):
         q = (
             stream.writeStream.foreachBatch(apply_batch)
             .option("checkpointLocation", ckpt)
@@ -6423,11 +6405,6 @@ def streaming_compacted_ingest(spark, sf_dir):
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
     out = spark.read.parquet(dec_dir)
     return out.select(
         "doc_id",
@@ -7570,17 +7547,8 @@ def streaming_session_counts(spark, sf_dir):
     # micro-batch order isn't time-ordered (see session_window_stream)
     agg = SW.session_window_stream(stream, gap="30 minutes", watermark=None)
     name = "mbdp_stream_sessions_tbl"
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
+    with _core_shuffle_partitions(spark):
         SW.run_to_memory(agg, name, output_mode="complete")
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
     return spark.table(name).select(
         "session_start", "session_end", "user_id", "n_events"
     )
@@ -7632,17 +7600,8 @@ def streaming_interval_join_counts(spark, sf_dir):
         views, buys, key="user_id", upper="1 hour", watermark="60 days"
     )
     name = "mbdp_stream_ivj_tbl"
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
+    with _core_shuffle_partitions(spark):
         SW.run_to_memory(joined, name, output_mode="append")
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
     return (
         spark.table(name)
         .groupBy(F.col("l_key").alias("user_id"))
@@ -7744,17 +7703,8 @@ def streaming_dedup_counts(spark, sf_dir):
     )
     dd = SW.dedup_stream(stream, keys=("event_id",), watermark="60 days")
     name = "mbdp_stream_dedup_tbl"
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
+    with _core_shuffle_partitions(spark):
         SW.run_to_memory(dd, name, output_mode="append")
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
     return (
         spark.table(name)
         .groupBy("event_type")
@@ -7796,23 +7746,8 @@ def streaming_hourly_counts(spark, sf_dir):
     )
     agg = SW.windowed_count_stream(stream, "1 hour", "2 hours", "event_type")
     name = "mbdp_stream_hourly_tbl"
-    # Stateful streaming disables AQE, so a driver-owned session's default
-    # 200 shuffle partitions stand for the whole micro-batch pipeline
-    # (~200 near-empty state tasks per trigger at test scale). Scope a
-    # core-sized setting to this stream — each call uses a fresh implicit
-    # checkpoint, so the state-partition count isn't pinned across runs —
-    # and restore the caller's value afterwards.
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
+    with _core_shuffle_partitions(spark):
         SW.run_to_memory(agg, name, output_mode="complete")
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
     return spark.table(name).select("window_start", "window_end", "event_type", "cnt")
 
 
@@ -8128,8 +8063,7 @@ def word_graph_bfs(spark, sf_dir):
     edges, vocab = _word_graph(spark, sf_dir)
     if vocab is not None:
         # encode the root through the same vocab (hop labels are plain
-        # ints; node ids are only join/distinct keys in the loop, never
-        # ordered — so hash ids are semantics-free here)
+        # ints; node ids are only join/distinct keys in the loop)
         srcn = srcn.join(
             F.broadcast(vocab), srcn.node == vocab.word
         ).select(F.col("wid").alias("node"))
@@ -9008,9 +8942,12 @@ def word_graph_sssp(spark, sf_dir):
     from mapreduce_big_data_processing_spark.operators import graph as G
 
     docs = _t(spark, sf_dir, "documents")
-    toks = TX.tokenize(docs, keep_cols=["doc_id"]).distinct()
-    # root selection stays on STRINGS: its count tie-break is asc(word)
-    # order, which hash ids would not preserve
+    # the same gated vocab encode as _word_graph; rank ids keep word order,
+    # so the root's asc(word) count tie-break picks the same word on ids,
+    # and (node, dist) decodes vertex-sized at the end
+    toks, vocab = _encode_tokens(
+        docs, TX.tokenize(docs, keep_cols=["doc_id"]).distinct()
+    )
     srcn = (
         toks.groupBy("word")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -9018,25 +8955,9 @@ def word_graph_sssp(spark, sf_dir):
         .limit(1)
         .select(F.col("word").alias("node"))
     )
-    # min-plus relaxation uses node ids as equality keys only — the same
-    # gated vocab encode as _word_graph applies; the root maps through the
-    # vocab and (node, dist) decodes vertex-sized at the end
-    toks, vocab = _encode_tokens(docs, toks)
-    if vocab is not None:
-        srcn = srcn.join(F.broadcast(vocab), srcn.node == vocab.word).select(
-            F.col("wid").alias("node")
-        )
     pairs = TX.cooccurrence_pairs(toks, symmetric=False)  # (w1, w2, cnt)
-    # one-pass symmetrization = the oracle's edges0, counts intact (the
-    # union-of-two-selects form executes tokenize->pairs twice — r7 lesson)
-    both = F.explode(
-        F.array(
-            F.struct(F.col("w1").alias("src"), F.col("w2").alias("dst")),
-            F.struct(F.col("w2").alias("src"), F.col("w1").alias("dst")),
-        )
-    )
-    edges = pairs.select(both.alias("e"), "cnt").select("e.src", "e.dst", "cnt")
-    we = edges.select(
+    # both directions = the oracle's edges0, counts intact
+    we = G.symmetric_pairs(pairs).select(
         "src",
         "dst",
         F.floor(F.lit(1000000.0) / F.col("cnt")).cast("bigint").alias("w"),

@@ -14,6 +14,8 @@ Defaults are chosen for the 100 TB posture:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -45,6 +47,25 @@ def tune(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # immutable in this build; builder-time conf covers it
     return spark
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, settings: Mapping[str, str]) -> Iterator[None]:
+    """Set session conf ``settings`` for the ``with`` body, then restore
+    each key: a key set before gets its old value back, a key unset before
+    is unset again. Session conf is global, so this assumes one query at a
+    time on the session (the driver protocol)."""
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_session(

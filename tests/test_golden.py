@@ -599,32 +599,3 @@ def test_triangle_counts_golden(spark):
         "d": (4, 3),  # 3 K4 triangles; the pendant edge adds degree only
         "e": (2, 0), "f": (1, 0),
     }
-
-
-def test_pagerank_encoded_loop_matches_string_loop(spark, monkeypatch):
-    """The r10 dictionary-encoding fast path (string node ids -> xxhash64
-    int64 for the iteration loop, decoded at the end) must return exactly
-    the rows the string loop returns — on a covered graph AND on a
-    dangling graph (the dangling set is itself encoded)."""
-    from mapreduce_big_data_processing_spark.operators import graph as G
-
-    sym = [
-        ("a", "b", 0.5), ("b", "a", 1.0), ("a", "c", 0.5),
-        ("c", "d", 1.0), ("d", "c", 0.5), ("d", "a", 0.5),
-    ]
-    dangling = [("a", "b", 1.0), ("b", "c", 0.5), ("b", "d", 0.5)]
-    for pairs in (sym, dangling):
-        edges = spark.createDataFrame(
-            pairs, "src string, dst string, weight double"
-        )
-        base = {
-            r.node: round(r.pr, 12)
-            for r in G.pagerank(edges, max_iter=7).collect()
-        }
-        monkeypatch.setattr(G, "_ENCODE_MIN_EDGES", 1)
-        enc = {
-            r.node: round(r.pr, 12)
-            for r in G.pagerank(edges, max_iter=7).collect()
-        }
-        monkeypatch.undo()
-        assert enc == base

@@ -1,13 +1,12 @@
-"""r11 optimization-equivalence tests: every size-gated fast path added in
-the r11 optimization round must return exactly the rows its ungated
-(string / single-pass) sibling returns.
+"""Optimization-equivalence tests: every size-gated fast path must return
+exactly the rows its ungated (string / single-pass) sibling returns.
 
-- label_propagation dictionary-encodes node ids to ORDER-PRESERVING rank
-  int64s above ``_ENCODE_MIN_EDGES`` (labels are values AND keys, and the
-  tie-break is ``asc(label)`` — hash ids would resolve ties differently);
-- ``queries._word_graph`` vocab-encodes tokens to xxhash64 int64 above
-  ``_GRAPH_ENCODE_MIN_BYTES`` so the pair self-join/aggregate and the
-  downstream graph consumers run on ints and decode vertex-sized output;
+- ``queries._encode_tokens`` is the one word-id dictionary: above
+  ``_GRAPH_ENCODE_MIN_BYTES`` every word-graph query maps tokens to
+  ORDER-PRESERVING rank int64s before the pair build, runs the pair
+  self-join/aggregate and the graph loop on ints, and decodes its
+  vertex-sized output (label propagation's labels are values AND keys with
+  an ``asc(label)`` tie-break, so hash ids would resolve ties differently);
 - ``curation.chunk_dedup`` switches to the keys-not-payload split (guide
   §8) above ``_SPLIT_SHUFFLE_MIN_BYTES``.
 """
@@ -21,42 +20,61 @@ from mapreduce_big_data_processing_spark.operators import curation as C
 from mapreduce_big_data_processing_spark.operators import graph as G
 
 
-def test_lpa_encoded_matches_string(spark, monkeypatch):
-    """Encoded LPA ≡ string LPA, including a same-score TIE at node m
-    (labels a and b, equal summed weight): the ascending-label tie-break
-    must pick 'a' on both paths — the property that forces rank ids."""
+def test_encode_tokens_ids_sort_as_words(spark, monkeypatch):
+    """Rank ids sort exactly as the words do in Spark's byte order
+    ('Z' < 'a', a non-ASCII word last), and LPA over ids decoded ≡ LPA
+    over strings, including a same-score TIE at node m (labels 'Z' and
+    'a', equal summed weight): the ascending-label tie-break must pick
+    'Z' on both paths — the property that forces rank ids."""
     edges = [
-        ("a", "m", 1.0),
-        ("b", "m", 1.0),  # the tie at m
-        ("a", "b", 2.0),
-        ("b", "a", 2.0),
+        ("Z", "m", 1.0),
+        ("a", "m", 1.0),  # the tie at m
+        ("Z", "a", 2.0),
+        ("a", "Z", 2.0),
         ("c", "d", 1.0),
         ("d", "c", 1.0),
         ("m", "c", 0.5),
+        ("é", "Zz", 1.0),
     ]
+    words = sorted({w for e in edges for w in e[:2]})
+    toks = spark.createDataFrame(
+        [(i, w) for i, w in enumerate(words)], "doc_id long, word string"
+    )
+    monkeypatch.setattr(Q, "_GRAPH_ENCODE_MIN_BYTES", 0)
+    _, vocab = Q._encode_tokens(toks, toks)
+    by_id = [r.word for r in vocab.orderBy("wid").collect()]
+    assert by_id == sorted(words, key=lambda w: w.encode())
+    assert by_id.index("Z") < by_id.index("a") < by_id.index("é")
+    assert [r.wid for r in vocab.orderBy("wid").collect()] == list(range(len(words)))
+
     df = spark.createDataFrame(edges, "src string, dst string, weight double")
     base = {
         r.node: r.label for r in G.label_propagation(df, max_iter=3).collect()
     }
-    assert base["m"] == "a"  # the tie resolved to the smaller label
-    monkeypatch.setattr(G, "_ENCODE_MIN_EDGES", 1)
-    enc = {
-        r.node: r.label for r in G.label_propagation(df, max_iter=3).collect()
-    }
-    assert enc == base
+    assert base["m"] == "Z"  # the tie resolved to the smaller label
+    sid = vocab.select(F.col("word").alias("src"), F.col("wid").alias("s"))
+    did = vocab.select(F.col("word").alias("dst"), F.col("wid").alias("d"))
+    enc_edges = df.join(sid, "src").join(did, "dst").select(
+        F.col("s").alias("src"), F.col("d").alias("dst"), "weight"
+    )
+    labels = G.label_propagation(enc_edges, max_iter=3)
+    dec = Q._decode_nodes(Q._decode_nodes(labels, vocab), vocab, "label")
+    assert {r.node: r.label for r in dec.collect()} == base
 
 
 def test_word_graph_encode_matches_string(spark, sf_dir, monkeypatch):
     """The vocab-encoded word-graph build (ints through the pair join,
     aggregate, normalization, loop) must be row-identical to the string
     build for every consumer shape: ranked floats (pagerank_top20),
-    integer structure (word_triangle_counts), and an encoded ROOT plus
-    hop labels (word_graph_bfs)."""
+    integer structure (word_triangle_counts), an encoded ROOT plus hop
+    labels (word_graph_bfs), and node AND label columns decoded
+    (label_propagation)."""
     for name in (
         "pagerank_top20",
         "word_triangle_counts",
         "word_graph_bfs",
         "word_graph_sssp",
+        "label_propagation",
     ):
         spark.catalog.clearCache()
         base = sorted(map(tuple, Q.QUERIES[name](spark, sf_dir).collect()))
@@ -103,3 +121,18 @@ def test_est_scan_partitions_small_scan_is_one(spark, sf_dir):
 
     df = catalog.load(spark, "embeddings", sf_dir).select("embedding")
     assert _est_scan_partitions(df) == 1
+
+
+def test_fan_out_confirms_a_skip_with_the_physical_partitions(spark, monkeypatch):
+    """When the byte estimate says the frame already spans every core, the
+    fan-out still checks the physical partition count: a one-partition
+    lineage that statistics call large must be fanned out."""
+    from mapreduce_big_data_processing_spark.operators import similarity as S
+
+    dp = spark.sparkContext.defaultParallelism
+    one = spark.range(0, 100, 1, 1)
+    monkeypatch.setattr(S, "_plan_size_bytes", lambda df: 1 << 40)  # 1 TiB
+    assert S._est_scan_partitions(one) >= dp  # the estimate says skip
+    assert S.fan_out(one).rdd.getNumPartitions() == dp
+    wide = spark.range(0, 100, 1, dp)
+    assert S.fan_out(wide) is wide

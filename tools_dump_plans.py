@@ -1,12 +1,23 @@
-"""Regenerate PLANS.md: explain('formatted') snapshots of representative
-queries at sf0.001 with AQE off (stable plan text).
+"""Dump explain('formatted') plans of registered queries.
+
+Usage:
+  python tools_dump_plans.py
+      Regenerate PLANS.md: snapshots of representative queries at sf0.001
+      with AQE off (stable plan text).
+  python tools_dump_plans.py --suffix after --sf DIR [--names a,b] [--aqe]
+                             [--out DIR]
+      Write one file per query, <out>/<query>_<suffix>.txt, for a before /
+      after comparison of plan text. Queries default to bench.HEADLINE;
+      AQE defaults to off (the bench posture), --aqe gives the scale
+      posture. --sf defaults to $SPARK_GRAFT_SF_DIR.
 
 The load-bearing plan properties are PINNED in tests/test_plan_shapes.py;
-this file is documentation for human review, not a gate.
+these dumps are documentation for human review, not a gate.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -41,6 +52,13 @@ PICKS = {
     "corpus_sample_ids": "TeraSort-rank id assignment: ONE range exchange + local sort, zero-shuffle Arrow index pass, broadcast offsets join — no Window, no single-partition funnel",
 }
 
+_JOINS = (
+    "BroadcastHashJoin",
+    "SortMergeJoin",
+    "ShuffledHashJoin",
+    "BroadcastNestedLoopJoin",
+)
+
 
 def main() -> None:
     from mapreduce_big_data_processing_spark.session import get_session
@@ -68,5 +86,41 @@ def main() -> None:
     print("PLANS.md written")
 
 
+def dump(suffix: str, sf_dir: str, names: list[str] | None, aqe: bool, outdir: str) -> None:
+    """One plan file per query, cache cleared between queries so every
+    plan is built from the same cold cache state."""
+    from bench import HEADLINE
+    from mapreduce_big_data_processing_spark import queries as Q
+    from mapreduce_big_data_processing_spark.session import get_session
+
+    spark = get_session("plans-dump", adaptive=aqe)
+    spark.sparkContext.setLogLevel("ERROR")
+    os.makedirs(outdir, exist_ok=True)
+    for name in names or [n for n in HEADLINE if n in Q.QUERIES]:
+        df = Q.QUERIES[name](spark, sf_dir)
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as f:
+            f.write(plan)
+        joins = [k for k in _JOINS if k in plan]
+        print(f"{name}_{suffix}: Exchange={plan.count('Exchange')} joins={joins}", flush=True)
+        spark.catalog.clearCache()
+
+
 if __name__ == "__main__":
-    main()
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--suffix", help="dump per-query files instead of PLANS.md")
+    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR"),
+                    help="fixture directory")
+    ap.add_argument("--names", help="comma-separated query names (default: bench.HEADLINE)")
+    ap.add_argument("--aqe", action="store_true", help="AQE on (default off)")
+    ap.add_argument("--out", default=os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans"),
+                    help="output directory (default: plans/)")
+    a = ap.parse_args()
+    if a.suffix is None:
+        main()
+    elif a.sf is None:
+        ap.error("--suffix needs --sf or SPARK_GRAFT_SF_DIR")
+    else:
+        dump(a.suffix, a.sf, a.names.split(",") if a.names else None, a.aqe, a.out)
